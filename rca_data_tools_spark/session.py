@@ -12,7 +12,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at least 1g and at most 48g: the JVM shares the
+    host with the Python workers (and, in the tests, DuckDB oracles)."""
+    gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / (1 << 30)
+    return f"{int(min(48, max(1, gib / 2)))}g"
 
 
 def get_spark(
@@ -41,7 +48,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Whole-stage codegen emits one compiled class per plan; a session
         # that runs 100+ distinct queries fills the JVM's default 240 MB code
         # cache, the JIT shuts off, and later queries run interpreted 3-5x

@@ -1,32 +1,28 @@
-"""Pure-Python/numpy decoder for Blosc1 chunks (the common Zarr v2 codec).
+"""Blosc1 chunk decoder (the common Zarr v2 codec): the container layout,
+shuffles and split framing in numpy, every compressed split through
+pyarrow's bundled C codecs.
 
 Real OOI Zarr stores are typically written with zarr-python's default
 compressor, ``Blosc(cname='lz4', clevel=5, shuffle=SHUFFLE)`` (reference
-stores opened at rca_data_tools/qaqc/dashboard.py:305-313) — so a native scan
-that rejects blosc never reads a real archive. This runtime ships neither
-``blosc`` nor ``lz4``, but both formats are small public specs:
+stores opened at rca_data_tools/qaqc/dashboard.py:305-313). This runtime
+ships no ``blosc`` binding, but the container is a small public spec
+(c-blosc README_CHUNK_FORMAT.rst): a 16-byte little-endian header
+``(version, versionlz, flags, typesize, nbytes, blocksize, cbytes)``, then
+either a verbatim copy (memcpy flag) or per-block ``int32`` start offsets
+followed by independently compressed blocks, each block a sequence of
+splits ``(int32 csize, stream)``.
 
-- Blosc1 chunk format (c-blosc README_CHUNK_FORMAT.rst): 16-byte header
-  ``(version, versionlz, flags, typesize, nbytes, blocksize, cbytes)``,
-  little-endian; then either a verbatim copy (memcpy flag) or per-block
-  ``int32`` start offsets followed by independently compressed blocks, each
-  block a sequence of splits ``(int32 csize, stream)``.
-- LZ4 *block* format (lz4 docs/lz4_Block_format.md): token byte with
-  literal/match lengths, 2-byte little-endian match offset, 255-extension
-  length bytes.
-
-Decode shape: this module is called executor-side from the Zarr chunk scan
-(one call per chunk, inside ``mapInPandas``), so the pure-Python LZ4 inner
-loop costs no driver time and parallelizes with the chunk grid. It is still
-~100x slower than the C codec — the module docstring of sources/zarr.py
-documents recompress-on-ingest (zlib/gzip) as the fast path; this decoder
-makes blosc archives *readable* without new native dependencies.
+Decode shape: called executor-side from the Zarr chunk scan (one call per
+chunk, inside ``mapInArrow``), so it costs no driver time and parallelizes
+with the chunk grid.
 
 Supported: byte-shuffle, bit-shuffle, memcpy chunks, LZ4 / zlib / zstd /
-snappy / blosclz-stored splits (zstd via the pure-Python RFC 8878 decoder in
-sources/zstd.py, snappy via sources/snappy.py validated against pyarrow's
-bundled C++ codec; blosclz only when splits are stored uncompressed, its
-compressed form is a different spec).
+snappy / blosclz-stored splits. LZ4 and snappy splits decode through
+``pyarrow.Codec('lz4_raw'/'snappy')``, zstd splits through the frame reader
+in sources/zstd.py, zlib through the stdlib; blosclz only when splits are
+stored uncompressed (its compressed form is a different spec). Every split
+must decode to exactly its expected size, and every structural fault
+raises ``ValueError``.
 
 Bit-shuffle layout (public, two independent definitions that agree):
 the bitshuffle library's own pure-numpy reference model — a little-bitorder
@@ -50,6 +46,9 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
+
+from rca_data_tools_spark.sources.zstd import arrow_decompress, zstd_decompress
 
 # flags bits (blosc.h)
 _SHUFFLE, _MEMCPYED, _BITSHUFFLE = 0x1, 0x2, 0x4
@@ -57,48 +56,43 @@ _CODECS = {0: "blosclz", 1: "lz4", 2: "snappy", 3: "zlib", 4: "zstd"}
 # split rule constants (c-blosc split_block, FORWARD_COMPAT mode)
 _MAX_STREAMS = 16
 _MIN_BUFFERSIZE = 128
+_LZ4 = pa.Codec("lz4_raw")
+_SNAPPY = pa.Codec("snappy")
 
 
 def lz4_block_decompress(src: bytes, out_size: int) -> bytes:
-    """LZ4 *block* format (no frame header), per the public spec."""
-    out = bytearray()
-    pos, n = 0, len(src)
-    while pos < n:
-        token = src[pos]
-        pos += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                b = src[pos]
-                pos += 1
-                lit_len += b
-                if b != 255:
-                    break
-        out += src[pos : pos + lit_len]
-        pos += lit_len
-        if pos >= n:
-            break  # last sequence carries literals only
-        offset = src[pos] | (src[pos + 1] << 8)
-        pos += 2
-        if offset == 0:
-            raise ValueError("corrupt LZ4 stream: zero match offset")
-        match_len = (token & 0xF) + 4
-        if match_len == 19:
-            while True:
-                b = src[pos]
-                pos += 1
-                match_len += b
-                if b != 255:
-                    break
-        start = len(out) - offset
-        if offset >= match_len:
-            out += out[start : start + match_len]
-        else:  # overlapping match: the repeating-pattern case
-            for i in range(match_len):
-                out.append(out[start + i])
-    if len(out) != out_size:
-        raise ValueError(f"LZ4 stream decoded {len(out)} bytes, expected {out_size}")
-    return bytes(out)
+    """One LZ4 *block* (no frame header) that must decode to exactly
+    ``out_size`` bytes. pyarrow's ``lz4_raw`` codec fails a stream that
+    overflows its output buffer but returns a short decode padded to the
+    buffer size, so the exact length is checked by requiring the stream to
+    overflow ``out_size - 1`` bytes."""
+    if out_size < 0:
+        raise ValueError(f"LZ4 block declares a negative size {out_size}")
+    out = arrow_decompress(_LZ4, src, out_size)
+    if out_size:
+        try:
+            arrow_decompress(_LZ4, src, out_size - 1)
+        except ValueError:
+            return out
+        raise ValueError(f"LZ4 stream decoded fewer than the expected {out_size} bytes")
+    return out
+
+
+def _snappy_decompress(src: bytes, out_size: int) -> bytes:
+    """One raw snappy stream that must decode to exactly ``out_size``
+    bytes. The preamble (uncompressed length, an unsigned varint) must
+    equal ``out_size``; libsnappy then refuses a stream whose elements
+    produce any other length."""
+    want = 0
+    for pos, b in enumerate(src[:5]):
+        want |= (b & 0x7F) << (7 * pos)
+        if not b & 0x80:
+            break
+    else:
+        raise ValueError("snappy: truncated or over-long length varint")
+    if want != out_size:
+        raise ValueError(f"snappy: preamble says {want} bytes, expected {out_size}")
+    return arrow_decompress(_SNAPPY, src, out_size)
 
 
 def _unshuffle(buf: bytes, typesize: int) -> bytes:
@@ -146,32 +140,21 @@ def _bit_unshuffle(buf: bytes, typesize: int) -> bytes:
 def _decode_split(codec: str, stream: bytes, out_size: int) -> bytes:
     if codec == "lz4":
         return lz4_block_decompress(stream, out_size)
+    if codec == "snappy":
+        return _snappy_decompress(stream, out_size)
     if codec == "zlib":
         out = zlib.decompress(stream)
-        if len(out) != out_size:
-            raise ValueError(f"zlib split decoded {len(out)} bytes, expected {out_size}")
-        return out
-    if codec == "zstd":
+    elif codec == "zstd":
         # c-blosc wraps each zstd split as a standard zstd frame
-        # (ZSTD_compress output) — the pure-Python RFC 8878 decoder reads it
-        from rca_data_tools_spark.sources.zstd import zstd_decompress
-
-        out = zstd_decompress(stream)
-        if len(out) != out_size:
-            raise ValueError(f"zstd split decoded {len(out)} bytes, expected {out_size}")
-        return out
-    if codec == "snappy":
-        # each split is one raw snappy stream (snappy_compress output)
-        from rca_data_tools_spark.sources.snappy import snappy_decompress
-
-        out = snappy_decompress(stream)
-        if len(out) != out_size:
-            raise ValueError(f"snappy split decoded {len(out)} bytes, expected {out_size}")
-        return out
-    raise NotImplementedError(
-        f"blosc inner codec {codec!r} not decodable in this runtime "
-        "(supported: lz4, zlib, zstd, snappy, and uncompressed splits)"
-    )
+        out = zstd_decompress(stream, max_output=out_size)
+    else:
+        raise NotImplementedError(
+            f"blosc inner codec {codec!r} not decodable in this runtime "
+            "(supported: lz4, zlib, zstd, snappy, and uncompressed splits)"
+        )
+    if len(out) != out_size:
+        raise ValueError(f"{codec} split decoded {len(out)} bytes, expected {out_size}")
+    return out
 
 
 def _split_rule(codec: str, typesize: int, blocksize: int) -> bool:
@@ -210,25 +193,44 @@ def _decode_block(codec: str, raw: bytes, lo: int, hi: int, bsize: int, nsplits:
     return b"".join(parts)
 
 
-def blosc_decompress(raw: bytes) -> bytes:
-    """Decode one Blosc1 chunk to its original bytes."""
+def blosc_decompress(raw: bytes, max_output: int | None = None) -> bytes:
+    """Decode one Blosc1 chunk to its original bytes. ``max_output`` (the
+    chunk's byte size, when the caller knows it) refuses a larger declared
+    ``nbytes`` before anything is allocated."""
     if len(raw) < 16:
         raise ValueError("blosc chunk shorter than its 16-byte header")
     version, _versionlz, flags, typesize = raw[0], raw[1], raw[2], raw[3]
     nbytes, blocksize, cbytes = struct.unpack_from("<iii", raw, 4)
     if version < 1 or version > 2:
         raise NotImplementedError(f"blosc chunk version {version} unsupported (blosc1/2 only)")
+    if nbytes < 0:
+        raise ValueError(f"blosc header declares a negative size {nbytes}")
+    if max_output is not None and nbytes > max_output:
+        raise ValueError(f"blosc header declares {nbytes} bytes, chunk holds {max_output}")
     if flags & _MEMCPYED:
         if len(raw) < 16 + nbytes:
             raise ValueError("memcpy blosc chunk truncated")
         return raw[16 : 16 + nbytes]
 
+    if blocksize <= 0 or typesize == 0:
+        raise ValueError(
+            f"blosc header declares block size {blocksize}, type size {typesize}"
+        )
     codec = _CODECS.get(flags >> 5, f"code{flags >> 5}")
     nblocks = -(-nbytes // blocksize)
+    body = 16 + 4 * nblocks
+    if not body <= cbytes <= len(raw):
+        raise ValueError(
+            f"blosc chunk of {len(raw)} bytes cannot hold {nblocks} block offsets "
+            f"and the {cbytes} bytes its header declares"
+        )
     bstarts = list(struct.unpack_from(f"<{nblocks}i", raw, 16))
     ends = bstarts[1:] + [cbytes]
+    if any(not body <= lo <= hi for lo, hi in zip(bstarts, ends)):
+        raise ValueError("blosc block offsets out of order or outside the chunk")
     leftover = nbytes - (nblocks - 1) * blocksize
-    out = bytearray()
+    view = memoryview(raw)  # splits are sliced without copying
+    blocks = []
     rule_splits = typesize if _split_rule(codec, typesize, blocksize) else 1
     for j, (lo, hi) in enumerate(zip(bstarts, ends)):
         last = j == nblocks - 1
@@ -236,20 +238,21 @@ def blosc_decompress(raw: bytes) -> bytes:
         # c-blosc never splits the leftover block
         nsplits = 1 if (last and bsize < blocksize) else rule_splits
         try:
-            block = _decode_block(codec, raw, lo, hi, bsize, nsplits)
+            block = _decode_block(codec, view, lo, hi, bsize, nsplits)
         except ValueError:
             # encoder used the other split mode (env-configurable in c-blosc);
             # the int32-csize chain is self-describing enough to disambiguate
             alt = 1 if nsplits != 1 else (typesize if typesize > 1 else 1)
             if alt == nsplits:
                 raise
-            block = _decode_block(codec, raw, lo, hi, bsize, alt)
+            block = _decode_block(codec, view, lo, hi, bsize, alt)
         if flags & _BITSHUFFLE:
             # meaningful even at typesize 1 (bit-transpose of plain bytes)
             block = _bit_unshuffle(block, typesize)
         elif flags & _SHUFFLE and typesize > 1:
             block = _unshuffle(block, typesize)
-        out += block
+        blocks.append(block)
+    out = b"".join(blocks)
     if len(out) != nbytes:
         raise ValueError(f"blosc chunk decoded {len(out)} bytes, expected {nbytes}")
-    return bytes(out)
+    return out

@@ -20,17 +20,15 @@ same keys are fetched by executors (fsspec-style paths); nothing changes
 structurally.
 
 Supported: C-order arrays, raw / zlib / gzip compressors (stdlib), zstd
-chunks (pure-Python RFC 8878 decoder in zstd.py — numcodecs-Zstd v2 stores
-and zarr v3's default compressor), blosc chunks with lz4/zlib/zstd splits
-and byte-shuffle (pure-numpy shim in blosc.py — zarr-python v2's default
-codec, so real OOI archives read natively; the pure-Python inner loops are
-~100x slower than the C codecs, so for repeated scans recompress to zlib on
-ingest), float and int dtypes, 1-D ``(time,)`` and 2-D ``(time, k)``
-variables — the reference's data model (§1.1: 2-D params become array
-columns; snappy inner codec via sources/snappy.py), byte- AND bit-shuffled
-blosc chunks (blosc.py), and the numcodecs ``delta`` v2 filter (cumsum
-decode — common on monotone coordinates); any other v2 filter refuses at
-metadata time rather than silently mis-decoding.
+chunks (numcodecs-Zstd v2 stores and zarr v3's default compressor; frame
+reader in zstd.py over pyarrow's libzstd), numcodecs LZ4 chunks, blosc
+chunks with lz4/zlib/zstd/snappy splits and byte- or bit-shuffle (blosc.py
+— zarr-python v2's default codec, so real OOI archives read natively; LZ4,
+snappy and zstd decode through pyarrow's bundled C codecs), float and int
+dtypes, 1-D ``(time,)`` and 2-D ``(time, k)`` variables — the reference's
+data model (§1.1: 2-D params become array columns), and the numcodecs v2
+filters listed in ``_V2_FILTERS``; any other v2 filter refuses at metadata
+time rather than silently mis-decoding.
 
 Zarr v3 stores (zarr.json array documents) are normalized onto the same
 decode path: regular chunk grids, `bytes` (either endian) +
@@ -49,7 +47,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rca_data_tools_spark.sources.blosc import blosc_decompress, lz4_block_decompress
 from rca_data_tools_spark.sources.bytes_io import as_store
+from rca_data_tools_spark.sources.zstd import zstd_decompress
 
 
 # Zarr v3 data_type names -> numpy kind+size (endianness comes from the
@@ -392,6 +392,19 @@ def _decode_shard(raw: bytes, meta: dict) -> np.ndarray:
     return out
 
 
+def _buf_nbytes(meta: dict) -> int:
+    """Byte size of a chunk's codec output: chunk shape × the widest dtype
+    its filter chain stores (plus packbits' leading count byte). A codec
+    header declaring more is corrupt and refused before any allocation."""
+    dt = np.dtype(meta["dtype"])
+    widest, extra = dt.itemsize, 0
+    for f in meta.get("filters") or []:
+        dt = _v2_filter_storage_dtype(f, dt)
+        widest = max(widest, dt.itemsize)
+        extra += f["id"] == "packbits"
+    return int(np.prod(meta["chunks"], dtype=np.int64)) * widest + extra
+
+
 def _decode_buf(raw: bytes, meta: dict) -> np.ndarray:
     if meta.get("checksum"):
         # v3 crc32c codec: stored chunk = payload + 4-byte LE CRC-32C
@@ -406,34 +419,27 @@ def _decode_buf(raw: bytes, meta: dict) -> np.ndarray:
     elif comp.get("id") in ("zlib", "gzip"):
         buf = zlib.decompress(raw, 47)  # wbits=47 accepts both zlib and gzip
     elif comp.get("id") == "blosc":
-        # zarr-python's default codec; decoded with the pure-numpy shim
-        # (sources/blosc.py — byte-shuffle + lz4/zlib/zstd splits). ~100x
-        # slower than the C codec: fine for making real archives readable,
-        # but recompress-to-zlib on ingest is the documented fast path.
-        from rca_data_tools_spark.sources.blosc import blosc_decompress
-
-        buf = blosc_decompress(raw)
+        # zarr-python's default codec (sources/blosc.py)
+        buf = blosc_decompress(raw, max_output=_buf_nbytes(meta))
     elif comp.get("id") == "zstd":
-        # numcodecs Zstd stores each chunk as one standard zstd frame;
-        # decoded by the pure-Python RFC 8878 decoder (sources/zstd.py,
-        # checksum-verified when the frame carries one)
-        from rca_data_tools_spark.sources.zstd import zstd_decompress
-
-        buf = zstd_decompress(raw)
+        # numcodecs Zstd stores each chunk as one standard zstd frame
+        buf = zstd_decompress(raw, max_output=_buf_nbytes(meta))
     elif comp.get("id") == "lz4":
         # numcodecs LZ4 chunk: 4-byte little-endian uncompressed size, then
-        # one LZ4 block (the block decoder already exists for blosc splits)
-        import struct as _struct
-
-        from rca_data_tools_spark.sources.blosc import lz4_block_decompress
-
-        (n,) = _struct.unpack_from("<i", raw, 0)
-        buf = lz4_block_decompress(raw[4:], n)
+        # one LZ4 block (the block decoder the blosc splits use)
+        if len(raw) < 4:
+            raise ValueError("lz4 zarr chunk shorter than its 4-byte size prefix")
+        n = int.from_bytes(raw[:4], "little", signed=True)
+        if not 0 <= n <= _buf_nbytes(meta):
+            raise ValueError(
+                f"lz4 zarr chunk declares {n} bytes, chunk holds {_buf_nbytes(meta)}"
+            )
+        buf = lz4_block_decompress(memoryview(raw)[4:], n)
     else:
         raise NotImplementedError(
             f"zarr compressor {comp.get('id')!r} needs a codec not present in "
             "this runtime (supported here: raw, zlib, gzip, zstd, lz4, "
-            "blosc[lz4/zlib/zstd])"
+            "blosc[lz4/zlib/zstd/snappy])"
         )
     filters = meta.get("filters") or []
     if filters:
@@ -843,10 +849,9 @@ def zarr_to_parquet(
     time_range: "tuple | None" = None,
 ) -> DataFrame:
     """Ingest conversion: one distributed pass from a Zarr v2 store (any codec
-    the scan supports, including the pure-Python blosc path) into the engine's
-    canonical Parquet layout — after which every read is the vectorized
-    C-speed scan with pushdown/pruning, and the slow codec is paid exactly
-    once. ``time_var`` (a numeric offset-from-epoch coordinate, the xarray
+    the scan supports) into the engine's canonical Parquet layout — after
+    which every read is the vectorized parquet scan with pushdown/pruning,
+    and chunk decode is paid exactly once. ``time_var`` (a numeric offset-from-epoch coordinate, the xarray
     convention) is rebuilt into a ``ts`` timestamp column so the output joins
     the rest of the engine's time machinery directly.
 

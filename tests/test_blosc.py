@@ -1,7 +1,8 @@
-"""Blosc1 chunk decoder: fixtures are encoded by hand from the public chunk
-format (and a minimal greedy LZ4 block encoder written here), since neither
-blosc nor lz4 exist in this runtime on either side. End-to-end: a blosc-lz4
-zarr store written by the test is scanned by the native zarr reader."""
+"""Blosc1 chunk decoder: chunks are laid out by hand from the public
+container format, with every compressed split produced by a real encoder
+(pyarrow's bundled ``lz4_raw`` / ``snappy`` / ``zstd`` codecs, or zlib).
+End-to-end: blosc zarr stores written by the test are scanned by the native
+zarr reader."""
 
 from __future__ import annotations
 
@@ -11,60 +12,32 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from rca_data_tools_spark.sources.blosc import (
     blosc_decompress,
     lz4_block_decompress,
 )
 
+_ENCODERS = {
+    1: pa.Codec("lz4_raw"),
+    2: pa.Codec("snappy"),
+    3: None,  # zlib
+    4: pa.Codec("zstd"),
+}
+
 
 def lz4_block_compress(data: bytes) -> bytes:
-    """Minimal valid LZ4 block encoder (greedy hash-match, spec-compliant
-    end-of-stream rules: last 5 bytes are literals, no match starts within
-    the last 12 bytes)."""
-    n = len(data)
-    out = bytearray()
-    anchor = 0
-    pos = 0
-    table: dict[bytes, int] = {}
+    """One LZ4 block (no frame) from pyarrow's bundled liblz4."""
+    return _ENCODERS[1].compress(data, asbytes=True)
 
-    def emit(lit: bytes, match_len: int = 0, offset: int = 0) -> None:
-        ll, ml = len(lit), match_len - 4 if match_len else 0
-        token = (min(ll, 15) << 4) | (min(ml, 15) if match_len else 0)
-        out.append(token)
-        if ll >= 15:
-            rest = ll - 15
-            while rest >= 255:
-                out.append(255)
-                rest -= 255
-            out.append(rest)
-        out.extend(lit)
-        if match_len:
-            out.extend(struct.pack("<H", offset))
-            if ml >= 15:
-                rest = ml - 15
-                while rest >= 255:
-                    out.append(255)
-                    rest -= 255
-                out.append(rest)
 
-    while pos + 12 <= n:
-        key = data[pos : pos + 4]
-        cand = table.get(key)
-        table[key] = pos
-        if cand is not None and pos - cand <= 0xFFFF and data[cand : cand + 4] == key:
-            match_len = 4
-            limit = n - 5  # spec: last 5 bytes must be literals
-            while pos + match_len < limit and data[cand + match_len] == data[pos + match_len]:
-                match_len += 1
-            emit(data[anchor:pos], match_len, pos - cand)
-            pos += match_len
-            anchor = pos
-        else:
-            pos += 1
-    emit(data[anchor:])  # final literals-only sequence
-    return bytes(out)
+def _compress_split(codec: int, split: bytes) -> bytes:
+    enc = _ENCODERS[codec]
+    return zlib.compress(split) if enc is None else enc.compress(split, asbytes=True)
 
 
 def blosc_chunk(
@@ -75,7 +48,8 @@ def blosc_chunk(
     blocksize: int | None = None,
     nsplits_override: int | None = None,
 ) -> bytes:
-    """Encode one Blosc1 chunk the way c-blosc lays it out.
+    """Encode one Blosc1 chunk the way c-blosc lays it out. ``codec`` is the
+    blosc codec id: 1 lz4, 2 snappy, 3 zlib, 4 zstd.
 
     ``shuffle`` may be True (byte shuffle), False, or ``"bit"`` (bitshuffle —
     forward transform from the module under test; independence comes from the
@@ -110,10 +84,7 @@ def blosc_chunk(
         for i in range(nsplits):
             want = neblock + (len(raw) - neblock * nsplits if i == nsplits - 1 else 0)
             split = raw[i * neblock : i * neblock + want]
-            if codec == 1:
-                c = lz4_block_compress(split)
-            else:
-                c = zlib.compress(split)
+            c = _compress_split(codec, split)
             if len(c) >= want:  # store uncompressed, as c-blosc does
                 c = split
             enc += struct.pack("<i", len(c)) + c
@@ -150,9 +121,10 @@ def test_blosc_chunk_shapes():
     for blocksize in (8192, 5000, len(data)):
         chunk = blosc_chunk(data, typesize=8, codec=1, shuffle=True, blocksize=blocksize)
         assert blosc_decompress(chunk) == data
-    # zlib inner codec, no shuffle
-    chunk = blosc_chunk(data, typesize=8, codec=3, shuffle=False, blocksize=4096)
-    assert blosc_decompress(chunk) == data
+    # snappy / zlib / zstd inner codecs, no shuffle
+    for codec in (2, 3, 4):
+        chunk = blosc_chunk(data, typesize=8, codec=codec, shuffle=False, blocksize=4096)
+        assert blosc_decompress(chunk) == data
     # random (incompressible) data -> stored splits
     rdata = rng.bytes(2048)
     chunk = blosc_chunk(rdata, typesize=4, codec=1, shuffle=True, blocksize=1024)
@@ -171,6 +143,147 @@ def test_blosc_memcpy_and_errors():
     zstd[2] = (zstd[2] & 0x1F) | (4 << 5)  # rewrite codec code to zstd
     with pytest.raises((NotImplementedError, ValueError)):
         blosc_decompress(bytes(zstd))
+
+
+def _one_split_chunk(codec: int, nbytes: int, stream: bytes, typesize: int = 1, flags: int = 0) -> bytes:
+    """A Blosc1 chunk of one block holding one split ``stream`` that the
+    header says decodes to ``nbytes`` bytes (no stored-split fallback)."""
+    block = struct.pack("<i", len(stream)) + stream
+    header = struct.pack("<BBBB", 1, 1, flags | (codec << 5), typesize)
+    header += struct.pack("<iii", nbytes, nbytes, 16 + 4 + len(block))
+    return header + struct.pack("<i", 20) + block
+
+
+def _snappy(data: bytes) -> bytes:
+    return _ENCODERS[2].compress(data, asbytes=True)
+
+
+def test_split_length_contract():
+    """pyarrow returns a short LZ4 decode padded to the requested size; the
+    decoder must still refuse any stream that is not exactly the declared
+    length, alone and inside a blosc split. A zstd split whose frame
+    declares more than the split holds is refused too."""
+    data = np.arange(1000, dtype="<f8").tobytes()
+    comp = lz4_block_compress(data)
+    assert lz4_block_decompress(comp, len(data)) == data
+    for size in (len(data) + 8, len(data) - 8, len(data) - 1):
+        with pytest.raises(ValueError):
+            lz4_block_decompress(comp, size)
+    with pytest.raises(ValueError, match="negative"):
+        lz4_block_decompress(comp, -1)
+    with pytest.raises(ValueError):
+        lz4_block_decompress(comp[:-3], len(data))
+    assert blosc_decompress(_one_split_chunk(1, len(data), comp)) == data
+    with pytest.raises(ValueError):
+        blosc_decompress(_one_split_chunk(1, len(data) + 8, comp))
+    frame = _ENCODERS[4].compress(data, asbytes=True)
+    with pytest.raises(ValueError, match="size bound"):
+        blosc_decompress(_one_split_chunk(4, len(data) - 8, frame))
+
+
+@pytest.mark.parametrize(
+    "data",
+    [
+        b"a",
+        b"hello world " * 400,  # long runs -> 2-byte-offset copies
+        bytes(range(256)) * 8,  # incompressible-ish literals
+        np.arange(50_000, dtype="<f8").tobytes(),  # >64 KiB, varint length >2 bytes
+        b"ab" * 40_000,  # overlapping-copy run-length case
+        np.random.default_rng(7).integers(0, 255, 200_000, dtype=np.uint8).tobytes(),
+    ],
+    ids=["one", "repetitive", "literals", "floats", "rle", "random"],
+)
+def test_snappy_split_decodes_reference_encoder_output(data):
+    assert blosc_decompress(_one_split_chunk(2, len(data), _snappy(data))) == data
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.binary(min_size=1, max_size=4096))
+def test_snappy_split_fuzz_reference_encoder(data):
+    assert blosc_decompress(_one_split_chunk(2, len(data), _snappy(data))) == data
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.binary(min_size=1, max_size=256), st.integers(1, 512))
+def test_snappy_split_corrupt_stream_raises_typed(stream, nbytes):
+    """Arbitrary split bytes must either decode to exactly ``nbytes`` or
+    raise ValueError, never an internal error."""
+    try:
+        assert len(blosc_decompress(_one_split_chunk(2, nbytes, stream))) == nbytes
+    except ValueError:
+        pass
+
+
+def test_snappy_split_corruption_cases():
+    good = _snappy(b"hello hello hello hello")
+    with pytest.raises(ValueError, match="varint"):
+        blosc_decompress(_one_split_chunk(2, 32, b"\xff" * 6))
+    # truncation mid-element or on an element boundary: loud either way
+    with pytest.raises(ValueError):
+        blosc_decompress(_one_split_chunk(2, 23, good[:-3]))
+    # a copy reaching before the start of output
+    with pytest.raises(ValueError):
+        blosc_decompress(_one_split_chunk(2, 8, bytes([0x08, 0x01, 200]) + b"abcd"))
+    # preamble promises more bytes than the elements produce
+    abc = _snappy(b"abc")
+    with pytest.raises(ValueError):
+        blosc_decompress(_one_split_chunk(2, 32, b"\x20" + abc[1:]))
+    # preamble disagrees with the split size the blosc header implies
+    for nbytes in (2, 4, 40):
+        with pytest.raises(ValueError, match="preamble"):
+            blosc_decompress(_one_split_chunk(2, nbytes, abc))
+
+
+def test_blosc_snappy_chunk_end_to_end():
+    """A byte-shuffled Blosc1 chunk whose split is a real snappy stream
+    (codec id 2): the wiring a ``Blosc(cname='snappy')`` Zarr store
+    exercises."""
+    data = np.arange(4096, dtype="<i4").tobytes()
+    shuffled = np.frombuffer(data, dtype=np.uint8).reshape(-1, 4).T.tobytes()
+    comp = _snappy(shuffled)
+    assert len(comp) < len(data)
+    assert blosc_decompress(_one_split_chunk(2, len(data), comp, typesize=4, flags=0x1)) == data
+
+
+def test_corrupt_blosc_headers_raise_value_error():
+    data = np.arange(512, dtype="<f8").tobytes()
+    good = blosc_chunk(data, typesize=8, codec=1, blocksize=1024)
+    assert blosc_decompress(good, max_output=len(data)) == data
+
+    def patched(nbytes=None, blocksize=None, cbytes=None, typesize=None):
+        raw = bytearray(good)
+        n, b, c = struct.unpack_from("<iii", raw, 4)
+        struct.pack_into("<iii", raw, 4, n if nbytes is None else nbytes,
+                         b if blocksize is None else blocksize,
+                         c if cbytes is None else cbytes)
+        if typesize is not None:
+            raw[3] = typesize
+        return bytes(raw)
+
+    cases = [
+        patched(blocksize=0),
+        patched(blocksize=-4),
+        patched(nbytes=-1),
+        patched(nbytes=2**31 - 1),  # offset table far past the chunk
+        patched(cbytes=len(good) + 100),
+        patched(cbytes=10),
+        patched(typesize=0),
+        good[:20],  # truncated inside the block-offset table
+        good[:-7],  # truncated block data
+    ]
+    # a block offset pointing outside the chunk
+    bad = bytearray(good)
+    struct.pack_into("<i", bad, 16, len(good) + 64)
+    cases.append(bytes(bad))
+    bad = bytearray(good)
+    struct.pack_into("<i", bad, 16, 3)  # inside the header
+    cases.append(bytes(bad))
+    for raw in cases:
+        with pytest.raises(ValueError):
+            blosc_decompress(raw)
+    # a declared size larger than the chunk's byte size is refused up front
+    with pytest.raises(ValueError, match="chunk holds"):
+        blosc_decompress(good, max_output=len(data) - 8)
 
 
 def test_bitshuffle_layout_vectors():
@@ -302,7 +415,7 @@ def test_zarr_scan_reads_blosc_store(spark, tmp_path):
 
 
 def test_zarr_to_parquet_ingest_conversion(spark, tmp_path):
-    """The recompress-on-ingest path: blosc store -> one distributed decode
+    """The ingest conversion path: blosc store -> one distributed decode
     pass -> canonical Parquet with a rebuilt ts column; re-read is the
     vectorized parquet scan."""
     from rca_data_tools_spark.sources.zarr import zarr_to_parquet

@@ -245,9 +245,10 @@ def test_results_invariant_to_shuffle_partitioning():
 
 
 # --- blosc/lz4 codec roundtrips ---------------------------------------------
-# No Spark needed: the codec is plain bytes->bytes; hypothesis drives both the
-# hand-written LZ4 encoder/decoder pair and the full blosc chunk layout
-# (shuffle x codec x blocksize x typesize) through random and structured data.
+# No Spark needed: the codec is plain bytes->bytes; hypothesis drives the LZ4
+# block decoder against pyarrow's liblz4 encoder and the full blosc chunk
+# layout (shuffle x codec x blocksize x typesize) through random and
+# structured data.
 
 blosc_payload = st.one_of(
     st.binary(min_size=0, max_size=4096),
@@ -271,7 +272,7 @@ def test_lz4_block_roundtrip_property(data):
     n_elems=st.integers(1, 600),
     typesize=st.sampled_from([1, 2, 4, 8]),
     shuffle=st.sampled_from([False, True, "bit"]),
-    codec=st.sampled_from([1, 3]),  # lz4, zlib
+    codec=st.sampled_from([1, 2, 3, 4]),  # lz4, snappy, zlib, zstd
     blocks=st.integers(1, 4),
     seed=st.integers(0, 2**31 - 1),
 )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import zlib
 
 import numpy as np
@@ -392,6 +393,41 @@ def test_zarr_v2_lz4_chunks(spark, tmp_path):
             f.write(_st.pack("<i", len(raw)) + lz4_block_compress(raw))
     got = [r["v"] for r in zarr_table(spark, root, ["v"]).orderBy("idx").collect()]
     np.testing.assert_allclose(got, vals)
+
+
+def test_codec_chunk_length_contract():
+    """A numcodecs LZ4 chunk must decode to exactly its size prefix, and
+    every codec header declaring more than the chunk's byte size (shape x
+    itemsize) is refused before decode: all as ValueError."""
+    import pyarrow as pa
+
+    from rca_data_tools_spark.sources.zarr import _decode_buf
+    from tests.test_blosc import blosc_chunk, lz4_block_compress
+
+    meta = {"compressor": {"id": "lz4"}, "dtype": "<f8", "chunks": [10]}
+    raw = np.arange(10, dtype="<f8").tobytes()
+    half = lz4_block_compress(raw[:40])
+    np.testing.assert_array_equal(
+        _decode_buf(struct.pack("<i", 80) + lz4_block_compress(raw), meta),
+        np.arange(10, dtype="<f8"),
+    )
+    bad = [
+        struct.pack("<i", 80) + half,  # prefix larger than the stream decodes
+        struct.pack("<i", -8) + half,  # negative prefix
+        struct.pack("<i", 88) + lz4_block_compress(raw + raw[:8]),  # past the chunk
+        b"\x50\x00",  # shorter than the 4-byte prefix
+    ]
+    for chunk in bad:
+        with pytest.raises(ValueError):
+            _decode_buf(chunk, meta)
+    big = np.arange(11, dtype="<f8").tobytes()
+    with pytest.raises(ValueError, match="chunk holds"):
+        _decode_buf(blosc_chunk(big, typesize=8), dict(meta, compressor={"id": "blosc"}))
+    with pytest.raises(ValueError, match="size bound"):
+        _decode_buf(
+            pa.Codec("zstd").compress(big, asbytes=True),
+            dict(meta, compressor={"id": "zstd"}),
+        )
 
 
 def test_zarr_missing_chunks_read_as_fill(spark, tmp_path):

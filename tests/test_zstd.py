@@ -1,8 +1,8 @@
-"""Pure-Python zstd decoder (sources/zstd.py): validated against the
-REFERENCE zstd CLI where one exists on the machine (real encoder output at
-many levels/shapes — no spec-reading circularity), with hand-crafted
-raw/RLE frames and failure paths covered unconditionally, plus the
-blosc-zstd and zarr-zstd integration routes."""
+"""zstd frame reader (sources/zstd.py, libzstd via pyarrow): decodes the
+REFERENCE zstd CLI's output where one exists on the machine (many
+levels/shapes, with and without content size and checksum), with
+hand-crafted raw/RLE frames and failure paths covered unconditionally, plus
+the blosc-zstd and zarr-zstd integration routes."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ import subprocess
 import numpy as np
 import pytest
 
-from rca_data_tools_spark.sources.zstd import xxh64, zstd_decompress
+from rca_data_tools_spark.sources.zstd import zstd_decompress
 
 _ZSTD_CLI = shutil.which("zstd")
 needs_cli = pytest.mark.skipif(_ZSTD_CLI is None, reason="no reference zstd CLI")
@@ -76,14 +76,6 @@ def test_truncated_raw_and_rle_blocks_raise():
     rle_hdr = (1 | (1 << 1) | (4 << 3)).to_bytes(3, "little")  # last RLE block, regen=4
     with pytest.raises(ValueError, match="truncated RLE block"):
         zstd_decompress(head + rle_hdr)  # repeated byte missing entirely
-
-
-def test_xxh64_reference_vectors():
-    # public reference values for xxhash64(seed=0)
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert xxh64(b"abc") == 0x44BC2CF5AD770999
-    assert xxh64(bytes(range(100))) == xxh64(bytes(range(100)))  # determinism
 
 
 @needs_cli
